@@ -55,7 +55,7 @@ ne = g.num_edges
 gc0, t0 = gc_ms(), time.time()
 res = _pagerank_loop(g, alpha=0.85, max_iter={rounds}, tol=0.0,
                      weight_col=None, checkpoint_dir=None,
-                     checkpoint_every=0, resume=False, mode="dataframe")
+                     checkpoint_every=0, resume=False)
 total, gc1 = time.time() - t0, gc_ms()
 secs = sorted(h["sec"] for h in res.history if "sec" in h)
 med = secs[len(secs) // 2]

@@ -192,7 +192,7 @@ ne = g.num_edges
 t0 = time.time()
 res = _pagerank_loop(g, alpha=0.85, max_iter={rounds}, tol={tol},
                      weight_col=None, checkpoint_dir=None, checkpoint_every=0,
-                     resume=False, mode="dataframe")
+                     resume=False)
 total = time.time() - t0
 # to-convergence mode (tol>0): rounds actually run, not the max_iter cap
 nr = res.rounds if {tol} > 0 else {rounds}
@@ -603,7 +603,7 @@ def write_report(payload: dict, best: dict | None = None) -> None:
         "100M headline | 86.58s / 6.93 MTEPS vs dataframe 39.81s / 15.07 "
         "MTEPS (6 rounds, fresh JVMs, same host phase — r4; 2.6x slower at "
         "32M in r3) | dataframe stays the headline path: cogroup Arrow-ships "
-        "the static CSR blocks to Python every round |",
+        "the static CSR blocks to Python every round; mode=csr removed |",
         "| multi-round plan fusion | 4.5x slower (no exchange reuse, r1) "
         "| one materialization per round |",
         "| 40g driver heap | 3x slower than 16g at local[32] (r1) | 16g |",

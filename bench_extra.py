@@ -90,7 +90,7 @@ def run_headline(n_edges: int) -> None:
     t0 = time.time()
     res = _pagerank_loop(g, alpha=0.85, max_iter=10, tol=0.0, weight_col=None,
                          checkpoint_dir=None, checkpoint_every=0,
-                         resume=False, mode="dataframe")
+                         resume=False)
     total = time.time() - t0
     secs = sorted(h["sec"] for h in res.history if "sec" in h)
     print(f"rounds: {[round(h['sec'],2) for h in res.history if 'sec' in h]}",

@@ -162,56 +162,51 @@ def louvain(
     community representatives at the deepest level."""
     P = graph.num_partitions
     spark = graph.spark
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sym = _sym(graph.edges, weight_col).repartition(P, "src").persist(
+    sym = _sym(graph.edges, weight_col).repartition(P, "src").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    self_loops = spark.createDataFrame([], "id long, w double")
+    # mapping from original vertex -> current-level vertex
+    mapping = graph.vertices.select("id", F.col("id").alias("v")).localCheckpoint(
+        eager=True
+    )
+    q_prev = modularity(sym, mapping.select(F.col("id"), F.col("v").alias("c")))
+
+    for _level in range(max_levels):
+        assign = _local_moving(sym, self_loops, max_moves, P)
+        q_new = modularity(sym, assign, self_loops if _level > 0 else None)
+        mapping = (
+            mapping.join(assign.withColumnRenamed("id", "v"), "v")
+            .select("id", F.col("c").alias("v"))
+            .localCheckpoint(eager=True)
+        )
+        if q_new <= q_prev + min_gain:
+            break
+        q_prev = q_new
+        # contract: communities become vertices
+        e2 = (
+            sym.join(assign.withColumnRenamed("id", "src").withColumnRenamed("c", "cs"), "src")
+            .join(assign.select(F.col("id").alias("dst"), F.col("c").alias("cd")), "dst")
+            .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+            .agg(F.sum("w").alias("w"))
+        )
+        new_self = e2.filter("src = dst").select(F.col("src").alias("id"), "w")
+        old_self = (
+            self_loops.join(assign, "id")
+            .groupBy(F.col("c").alias("id"))
+            .agg(F.sum("w").alias("w"))
+        )
+        self_loops = (
+            new_self.unionByName(old_self)
+            .groupBy("id")
+            .agg(F.sum("w").alias("w"))
+            .localCheckpoint(eager=True)
+        )
+        new_sym = e2.filter("src <> dst").repartition(P, "src").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        self_loops = spark.createDataFrame([], "id long, w double")
-        # mapping from original vertex -> current-level vertex
-        mapping = graph.vertices.select("id", F.col("id").alias("v")).localCheckpoint(
-            eager=True
-        )
-        q_prev = modularity(sym, mapping.select(F.col("id"), F.col("v").alias("c")))
-
-        for _level in range(max_levels):
-            assign = _local_moving(sym, self_loops, max_moves, P)
-            q_new = modularity(sym, assign, self_loops if _level > 0 else None)
-            mapping = (
-                mapping.join(assign.withColumnRenamed("id", "v"), "v")
-                .select("id", F.col("c").alias("v"))
-                .localCheckpoint(eager=True)
-            )
-            if q_new <= q_prev + min_gain:
-                break
-            q_prev = q_new
-            # contract: communities become vertices
-            e2 = (
-                sym.join(assign.withColumnRenamed("id", "src").withColumnRenamed("c", "cs"), "src")
-                .join(assign.select(F.col("id").alias("dst"), F.col("c").alias("cd")), "dst")
-                .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-                .agg(F.sum("w").alias("w"))
-            )
-            new_self = e2.filter("src = dst").select(F.col("src").alias("id"), "w")
-            old_self = (
-                self_loops.join(assign, "id")
-                .groupBy(F.col("c").alias("id"))
-                .agg(F.sum("w").alias("w"))
-            )
-            self_loops = (
-                new_self.unionByName(old_self)
-                .groupBy("id")
-                .agg(F.sum("w").alias("w"))
-                .localCheckpoint(eager=True)
-            )
-            new_sym = e2.filter("src <> dst").repartition(P, "src").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            new_sym.count()
-            sym.unpersist()
-            sym = new_sym
+        new_sym.count()
         sym.unpersist()
-        return mapping.select("id", F.col("v").alias("community"))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        sym = new_sym
+    sym.unpersist()
+    return mapping.select("id", F.col("v").alias("community"))

@@ -14,7 +14,7 @@ Two variants, mirroring the reference's two in-repo semantics
   (``grape::PageRank``, run_app.h:342-358): identical update rule, exactly
   ``rounds`` iterations, no convergence test.
 
-Execution plan (per superstep, steady state, ``mode="dataframe"``):
+Execution plan (per superstep, steady state):
 
     contribs = links ⋈ ranks        -- zero-shuffle: links persisted
                                     --   hash(src, P); ranks arrive already
@@ -28,9 +28,6 @@ Execution plan (per superstep, steady state, ``mode="dataframe"``):
 
 so each superstep moves exactly one message-table's worth of data — the same
 communication volume as grape's MPI all-to-all.
-
-``mode="csr"`` replaces the gather join with a partition-local sparse
-gather-scatter over CSR blocks inside ``applyInPandas`` (engine/csr.py).
 """
 
 from __future__ import annotations
@@ -159,7 +156,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
     resume: bool = True,
-    mode: str = "dataframe",
     return_result: bool = False,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame | SuperstepResult:
@@ -180,7 +176,6 @@ def pagerank(
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        mode=mode,
         init_ranks=init_ranks,
     )
     if return_result:
@@ -193,19 +188,8 @@ def pagerank_ldbc(
     damping: float = 0.85,
     rounds: int = 10,
     weight_col: str | None = None,
-    mode: str = "dataframe",
-    fuse_rounds: int = 1,
 ) -> DataFrame:
-    """Fixed-round LDBC/grape PageRank (no convergence test).
-
-    ``fuse_rounds=K`` chains K power-iteration rounds into one Spark job
-    (dangling mass computed in-plan via a broadcast 1-row aggregate) —
-    semantics-preserving and correctness-tested, but MEASURED SLOWER than
-    per-round materialization (4.5x at 2M edges, AQE on or off): each fused
-    round references the previous round's plan 2-3x and Spark's exchange
-    reuse does not deduplicate them, so work grows exponentially in K. Kept
-    as a documented negative result; leave the default of 1.
-    """
+    """Fixed-round LDBC/grape PageRank (no convergence test)."""
     res = _pagerank_loop(
         graph,
         alpha=damping,
@@ -215,8 +199,6 @@ def pagerank_ldbc(
         checkpoint_dir=None,
         checkpoint_every=0,
         resume=False,
-        mode=mode,
-        fuse_rounds=fuse_rounds,
     )
     return res.state.select("id", F.col("rank").alias("pagerank"))
 
@@ -230,8 +212,6 @@ def _pagerank_loop(
     checkpoint_dir: str | None,
     checkpoint_every: int,
     resume: bool,
-    mode: str,
-    fuse_rounds: int = 1,
     init_ranks: DataFrame | None = None,
 ) -> SuperstepResult:
     P = graph.num_partitions
@@ -239,36 +219,13 @@ def _pagerank_loop(
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     ew = graph.edges.select("src", "dst", w.alias("w"))
-    # Degree table: persisted + materialized ONCE — it used to be recomputed
-    # three times before round 1 (links build, dangling probe, init), each a
-    # full edge-table aggregation (guide §1.2: don't compute things twice).
+    # Degree table: persisted + materialized ONCE — the dangling probe and
+    # init both read it, and each recompute would be a full edge-table
+    # aggregation (guide §1.2: don't compute things twice).
     out_w = ew.groupBy("src").agg(F.sum("w").alias("wdeg")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     n_out = out_w.count()
-
-    def _links():
-        # Static per-edge transition shares, co-located with the src
-        # fragment — only the CSR and fused paths need a materialized share
-        # table; the dataframe path carries wdeg in the state and computes
-        # shares in-flight, avoiding a second persisted copy of the edge
-        # table (half the memory footprint at the 800M-edge point) and the
-        # full-edge build join before round 1. shuffle_hash: a sort-merge
-        # join here sorts the whole edge table for no benefit (guide §3.1).
-        return (
-            ew.join(out_w.hint("shuffle_hash"), "src")
-            .select("src", "dst", (F.col("w") / F.col("wdeg")).alias("share"))
-            .repartition(P, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    links = None
-    csr_blocks = None
-    if mode == "csr":
-        from graphscope_spark.engine.csr import build_csr_blocks
-
-        links = _links()
-        csr_blocks = build_csr_blocks(links, P)
 
     def init() -> DataFrame:
         # dangling flag is part of the state so a resumed run needs no
@@ -323,68 +280,6 @@ def _pagerank_loop(
     has_dangling = n_out < n
     skip_reduce = (not has_dangling) and tol <= 0
 
-    def one_round_fused(cur: DataFrame) -> DataFrame:
-        """One power-iteration round as a pure plan (no driver scalar):
-        union-aggregate form — contributions and the per-vertex base term are
-        unioned and summed in ONE shuffle; the dangling mass enters as a
-        broadcast 1-row aggregate (the all-reduce folded into the plan)."""
-        contribs = (
-            links.join(
-                cur.select("id", "rank").hint("shuffle_hash"),
-                links.src == F.col("id"),
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.lit(alpha) * F.col("share") * F.col("rank")).alias("c"),
-                F.lit(None).cast("boolean").alias("dangling"),
-            )
-        )
-        if has_dangling:
-            dsdf = cur.groupBy().agg(
-                F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
-                    "_ds"
-                )
-            )
-            base = (
-                F.lit(alpha) * F.coalesce(F.col("_ds"), F.lit(0.0)) / n
-                + F.lit((1.0 - alpha) / n)
-            )
-            based = cur.crossJoin(F.broadcast(dsdf)).select(
-                "id", base.alias("c"), "dangling"
-            )
-        else:
-            based = cur.select(
-                "id", F.lit((1.0 - alpha) / n).alias("c"), "dangling"
-            )
-        return contribs.unionByName(based).groupBy("id").agg(
-            F.sum("c").alias("rank"), F.max("dangling").alias("dangling")
-        )
-
-    def body_fused(state: DataFrame, superstep: int) -> tuple[DataFrame, dict]:
-        done = (superstep - 1) * fuse_rounds
-        k = min(fuse_rounds, max_iter - done)
-        cur = state.select("id", "rank", "dangling")
-        for _ in range(k):
-            cur = one_round_fused(cur)
-        return cur, lambda st: {"converged": False, "fused_rounds": k}
-
-    if fuse_rounds > 1 and tol <= 0 and mode == "dataframe":
-        import math
-
-        links = _links()
-        try:
-            res = run_supersteps(
-                init, body_fused,
-                max_rounds=math.ceil(max_iter / fuse_rounds),
-                checkpoint_dir=checkpoint_dir,
-                checkpoint_every=checkpoint_every or 5,
-                resume=resume,
-            )
-            return res
-        finally:
-            links.unpersist()
-            out_w.unpersist()
-
     def body(state: DataFrame, rnd: int) -> tuple[DataFrame, dict]:
         if skip_reduce:
             ds_cell[0] = 0.0
@@ -395,28 +290,23 @@ def _pagerank_loop(
         ds = ds_cell[0]
         base = alpha * ds / n + (1.0 - alpha) / n
 
-        if mode == "csr":
-            from graphscope_spark.engine.csr import csr_messages
-
-            msgs = csr_messages(csr_blocks, state.select("id", "rank"), P)
-        else:
-            # share computed in-flight from the state's wdeg: the gather
-            # reads the graph's ONE persisted edge table directly (no
-            # separate share-table build or second edge copy in memory);
-            # dangling vertices have null wdeg but also no out-edges, so
-            # they never match this join.
-            msgs = (
-                ew.join(
-                    state.select("id", "rank", "wdeg").hint("shuffle_hash"),
-                    ew.src == F.col("id"),
-                )
-                .select(
-                    F.col("dst"),
-                    (F.col("w") * F.col("rank") / F.col("wdeg")).alias("contrib"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("contrib").alias("msg"))
+        # share computed in-flight from the state's wdeg: the gather reads
+        # the graph's ONE persisted edge table directly (no separate
+        # share-table build or second edge copy in memory); dangling
+        # vertices have null wdeg but also no out-edges, so they never
+        # match this join.
+        msgs = (
+            ew.join(
+                state.select("id", "rank", "wdeg").hint("shuffle_hash"),
+                ew.src == F.col("id"),
             )
+            .select(
+                F.col("dst"),
+                (F.col("w") * F.col("rank") / F.col("wdeg")).alias("contrib"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("contrib").alias("msg"))
+        )
 
         new_rank = alpha * F.coalesce(F.col("msg"), F.lit(0.0)) + F.lit(base)
         cols = [state.id.alias("id"), new_rank.alias("rank"), "wdeg", "dangling"]
@@ -463,6 +353,3 @@ def _pagerank_loop(
         )
     finally:
         out_w.unpersist()
-        if csr_blocks is not None:
-            links.unpersist()
-            csr_blocks.unpersist()

@@ -16,8 +16,7 @@ vectorized contract in engine/superstep.py), and each superstep REBUILDS
 the adjacency ``collect_list`` (the per-edge dst-value mirror changes every
 round). The edge table is persisted pre-partitioned on dst, so the state
 join co-locates without re-shuffling edges — but the per-round regroup by
-src still shuffles edge-sized data and Arrow-ships it to Python (the same
-cost class as the measured-negative CSR-in-Python path).
+src still shuffles edge-sized data and Arrow-ships it to Python.
 Use this surface to port reference UDF apps verbatim, not as the scale
 path; the r3 CSR A/B in BENCH/BASELINE.md quantifies why static blocks
 re-shipped to Python every round lose to the JVM dataframe loop.

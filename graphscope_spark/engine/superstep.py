@@ -6,20 +6,21 @@ default_worker.h:88-135) runs ``PEval`` then ``IncEval`` until
 exchange is an MPI all-to-all and whose scalar reductions are
 ``grape::Communicator::Sum`` all-reduces.
 
-Here: PEval = the algorithm's ``init``; IncEval = its ``body`` (a function of
-the persisted state DataFrame returning the next state plus metrics); the
-message exchange is the shuffle inside ``body``; ToTerminate = the
-``converged`` flag in the returned metrics (computed from a scalar
+Here: PEval = the algorithm's ``init``; IncEval = its ``body``, a function of
+the materialized state DataFrame returning ``(plan, finalize)`` — the next
+state's plan, and a function of the materialized next state returning the
+round's metrics; the message exchange is the shuffle inside ``plan``;
+ToTerminate = the ``converged`` flag in those metrics (computed from a scalar
 ``agg().collect()`` — the all-reduce). The loop owns the three things Spark
 does not do for you (SURVEY.md §4.1):
 
 * **lineage truncation** — every iteration adds plan nodes; without
   truncation analysis/optimization time grows with the round number (measured
-  locally: 1s → 27s/round by round 6). We ``localCheckpoint`` (or
-  durable-checkpoint) every ``truncate_every`` rounds; the default of 1 keeps
-  per-round time flat (~0.5s fixed overhead locally) at the cost of one extra
-  block write per round — at cluster scale the write is local to executors
-  and amortized against shuffle volume.
+  locally: 1s → 27s/round by round 6). Every round's plan is materialized
+  once with ``localCheckpoint``, which keeps per-round time flat (~0.5s fixed
+  overhead locally) at the cost of one block write per round — at cluster
+  scale the write is local to executors and amortized against shuffle
+  volume.
 * **durable checkpointing** — state + metrics committed to an Iceberg-layout
   table (engine/checkpoint.py) every ``checkpoint_every`` rounds so a run
   resumes mid-iteration.
@@ -41,10 +42,12 @@ from graphscope_spark.engine.checkpoint import CheckpointManager
 __all__ = ["SuperstepResult", "run_supersteps"]
 
 # body(state, round_no) -> (next_state_plan, finalize) where
-# finalize(materialized_state) -> metrics (preferred: one materialization per
-# round), or (persisted_state, metrics) (legacy). Metrics must contain
+# finalize(materialized_next_state) -> metrics. Metrics must contain
 # "converged": bool; anything else (eps, active counts) is recorded.
-Body = Callable[[DataFrame, int], tuple[DataFrame, Any]]
+Body = Callable[
+    [DataFrame, int],
+    tuple[DataFrame, Callable[[DataFrame], dict[str, Any]]],
+]
 
 
 @dataclass
@@ -67,9 +70,7 @@ def run_supersteps(
     max_rounds: int,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
-    truncate_every: int = 1,
     resume: bool = True,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> SuperstepResult:
     """Run ``init`` (PEval) then ``body`` (IncEval) to convergence.
 
@@ -93,7 +94,7 @@ def run_supersteps(
             resumed_from = start_round
             history.append({"round": start_round, "resumed": True, **last_metrics})
             if last_metrics.get("converged"):
-                state = state.persist(storage_level)
+                state = state.persist(StorageLevel.MEMORY_AND_DISK)
                 return SuperstepResult(state, start_round, True, history, resumed_from)
         else:
             state = init()
@@ -109,15 +110,14 @@ def run_supersteps(
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return _loop(state, body, start_round, max_rounds, ckpt,
-                     checkpoint_every, truncate_every, storage_level,
-                     history, resumed_from, spark)
+                     checkpoint_every, history, resumed_from, spark)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", sp_before)
 
 
 def _loop(state, body, start_round, max_rounds, ckpt, checkpoint_every,
-          truncate_every, storage_level, history, resumed_from, spark=None):
+          history, resumed_from, spark=None):
     state = state.localCheckpoint(eager=True)  # materialize PEval + truncate
 
     if spark is not None:
@@ -139,40 +139,16 @@ def _loop(state, body, start_round, max_rounds, ckpt, checkpoint_every,
     while rnd < max_rounds and not converged:
         rnd += 1
         t0 = time.time()
-        out = body(state, rnd)
-        plan, second = out
-
-        if callable(second):
-            # plan+finalize protocol: ONE materialization per round
-            # (localCheckpoint = compute + block write + lineage truncation),
-            # then the driver all-reduce runs over the materialized blocks.
-            new_state = plan.localCheckpoint(eager=True)
-            metrics = second(new_state)
-            if ckpt is not None and (
-                rnd % checkpoint_every == 0 or metrics.get("converged")
-            ):
-                ckpt.commit(new_state, rnd, metrics)
-        else:
-            # legacy protocol: body persisted+materialized the state itself
-            metrics = second
-            new_state = plan.persist(storage_level)
-            do_ckpt = ckpt is not None and (
-                rnd % checkpoint_every == 0 or metrics.get("converged")
-            )
-            if do_ckpt:
-                ckpt.commit(new_state, rnd, metrics)
-                # Re-read: truncates lineage AND makes the in-memory state
-                # byte-identical to what a resume would load.
-                new_state.unpersist()
-                new_state = ckpt.load(rnd)[1].persist(storage_level)
-                new_state.count()
-            elif rnd % truncate_every == 0:
-                truncated = new_state.localCheckpoint(eager=True)
-                new_state.unpersist()
-                new_state = truncated
-            else:
-                new_state.count()  # materialize before dropping the parent
-            state.unpersist()
+        plan, finalize = body(state, rnd)
+        # ONE materialization per round (localCheckpoint = compute + block
+        # write + lineage truncation), then the driver all-reduce runs over
+        # the materialized blocks.
+        new_state = plan.localCheckpoint(eager=True)
+        metrics = finalize(new_state)
+        if ckpt is not None and (
+            rnd % checkpoint_every == 0 or metrics.get("converged")
+        ):
+            ckpt.commit(new_state, rnd, metrics)
 
         # old localCheckpoint blocks are released by the ContextCleaner once
         # the previous DataFrame reference drops

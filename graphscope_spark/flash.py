@@ -76,16 +76,9 @@ def cc(graph: Graph) -> DataFrame:
     return _wcc(graph)
 
 
-cc_opt = cc_push = cc_pull = cc
-
-
-def cc_block(graph: Graph) -> DataFrame:
-    """cc-block.h / cc-union.h: intra-partition union-find — the CSR block
-    mode plays that role here."""
-    return _wcc(graph, mode="csr")
-
-
-cc_union = cc_block
+# cc-block.h / cc-union.h (intra-partition union-find) compute the same
+# min-label components; the frontier propagation plan serves them all.
+cc_opt = cc_push = cc_pull = cc_block = cc_union = cc
 
 
 def cc_log(graph: Graph) -> DataFrame:

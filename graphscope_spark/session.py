@@ -42,7 +42,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(sp))
-        # Arrow-vectorized pandas UDF exchange (CSR gather-scatter kernels).
+        # Arrow-vectorized pandas UDF exchange (applyInPandas kernels).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Iterative jobs re-reference the same small plans many times;

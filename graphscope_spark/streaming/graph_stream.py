@@ -58,30 +58,35 @@ class StreamingWCC:
 
         from graphscope_spark.engine.ingress import wcc_delta, wcc_delta_delete
 
-        if not batch_df.take(1):
-            return
+        # One action sizes the whole batch: per-op row counts decide
+        # empty / add / delete and catch unexpected op values.
         if "op" in batch_df.columns:
-            bad = batch_df.filter(
-                F.col("op").isNull() | ~F.col("op").isin("add", "del")
-            )
-            sample = bad.take(1)
-            if sample:
+            counts = {
+                r["op"]: r["count"]
+                for r in batch_df.groupBy("op").count().collect()
+            }
+            bad = [op for op in counts if op not in ("add", "del")]
+            if bad:
                 raise ValueError(
                     "graph_stream: batch contains rows with unexpected op "
-                    f"value {sample[0]['op']!r} (expected 'add'/'del') — "
+                    f"value {bad[0]!r} (expected 'add'/'del') — "
                     "refusing to silently drop edges"
                 )
+            n_add, n_del = counts.get("add", 0), counts.get("del", 0)
             adds = batch_df.filter(F.col("op") == "add").select("src", "dst")
             dels = batch_df.filter(F.col("op") == "del").select("src", "dst")
         else:
+            n_add, n_del = batch_df.count(), 0
             adds, dels = batch_df.select("src", "dst"), None
-        if adds.take(1):
+        if n_add + n_del == 0:
+            return
+        if n_add:
             adds = adds.localCheckpoint()
             self.components = wcc_delta(
                 self.graph, adds, self.components
             ).localCheckpoint()
             self.graph = self.graph.add_edges(adds)
-        if dels is not None and dels.take(1):
+        if n_del:
             dels = dels.localCheckpoint()
             self.components = wcc_delta_delete(
                 self.graph, dels, self.components

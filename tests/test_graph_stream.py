@@ -115,5 +115,11 @@ def test_streaming_wcc_rejects_unknown_op(spark):
     batch = spark.createDataFrame(
         [(0, 1, "upsert")], "src long, dst long, op string"
     )
-    with pytest.raises(ValueError, match="unexpected op"):
+    with pytest.raises(ValueError, match="unexpected op value 'upsert'"):
         s.process_batch(batch, 0)
+    batch = spark.createDataFrame(
+        [(0, 1, "add"), (1, 0, None)], "src long, dst long, op string"
+    )
+    with pytest.raises(ValueError, match="unexpected op value None"):
+        s.process_batch(batch, 1)
+    assert s.batches_applied == 0

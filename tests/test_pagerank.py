@@ -7,11 +7,11 @@ from tests.conftest import ALL_FIXTURES, make_graph, p2p_mid
 from tests.oracles import pagerank_oracle
 
 
-def _check(spark, vertices, edges, mode="dataframe", **kw):
+def _check(spark, vertices, edges, **kw):
     from graphscope_spark.algorithms.pagerank import pagerank
 
     g = make_graph(spark, edges, vertices)
-    got = {r["id"]: r["pagerank"] for r in pagerank(g, mode=mode, **kw).collect()}
+    got = {r["id"]: r["pagerank"] for r in pagerank(g, **kw).collect()}
     want = pagerank_oracle(vertices, edges, **{k: kw[k] for k in ("alpha", "tol", "max_iter") if k in kw})
     assert set(got) == set(want)
     ids = sorted(want)
@@ -29,25 +29,24 @@ def test_pagerank_fixtures(spark, name):
 
 
 def test_pagerank_p2p_mid(spark):
-    vertices, edges = p2p_mid()
-    _check(spark, vertices, edges)
-
-
-def test_pagerank_csr_mode(spark):
-    vertices, edges = p2p_mid(n=120, m=900)
-    _check(spark, vertices, edges, mode="csr")
+    for kw in ({}, {"n": 120, "m": 900}):
+        vertices, edges = p2p_mid(**kw)
+        _check(spark, vertices, edges)
 
 
 def test_pagerank_ldbc_fixed_rounds(spark):
     from graphscope_spark.algorithms.pagerank import pagerank_ldbc
 
-    vertices, edges = ALL_FIXTURES["dangling_chain"]
-    g = make_graph(spark, edges, vertices)
-    got = {r["id"]: r["pagerank"] for r in pagerank_ldbc(g, rounds=7).collect()}
-    want = pagerank_oracle(vertices, edges, fixed_rounds=7)
-    ids = sorted(want)
-    np.testing.assert_allclose([got[i] for i in ids], [want[i] for i in ids], atol=1e-9)
-    g.unpersist()
+    for (vertices, edges), rounds in (
+        (ALL_FIXTURES["dangling_chain"], 7),
+        (p2p_mid(n=200, m=1500), 10),
+    ):
+        g = make_graph(spark, edges, vertices)
+        got = {r["id"]: r["pagerank"] for r in pagerank_ldbc(g, rounds=rounds).collect()}
+        want = pagerank_oracle(vertices, edges, fixed_rounds=rounds)
+        ids = sorted(want)
+        np.testing.assert_allclose([got[i] for i in ids], [want[i] for i in ids], atol=1e-12)
+        g.unpersist()
 
 
 def test_pagerank_weighted(spark):

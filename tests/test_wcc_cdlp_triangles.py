@@ -21,25 +21,16 @@ def test_wcc_fixtures(spark, name):
     g.unpersist()
 
 
-def test_wcc_csr_mode(spark):
-    from graphscope_spark.algorithms.wcc import wcc
-
-    vertices, edges = p2p_mid(n=200, m=300)
-    g = make_graph(spark, edges, vertices)
-    got = _collect_map(wcc(g, mode="csr"), "component")
-    assert got == wcc_oracle(vertices, edges)
-    g.unpersist()
-
-
 def test_wcc_p2p_mid_sparse(spark):
     # sparse → multiple components
     from graphscope_spark.algorithms.wcc import wcc
 
-    vertices, edges = p2p_mid(n=400, m=420)
-    g = make_graph(spark, edges, vertices)
-    got = _collect_map(wcc(g), "component")
-    assert got == wcc_oracle(vertices, edges)
-    g.unpersist()
+    for n, m in ((400, 420), (200, 300)):
+        vertices, edges = p2p_mid(n=n, m=m)
+        g = make_graph(spark, edges, vertices)
+        got = _collect_map(wcc(g), "component")
+        assert got == wcc_oracle(vertices, edges), (n, m)
+        g.unpersist()
 
 
 @pytest.mark.parametrize("name", ["ring_ties", "two_components", "star_hub"])
@@ -56,29 +47,13 @@ def test_cdlp_fixtures(spark, name):
 def test_cdlp_p2p_mid(spark):
     from graphscope_spark.algorithms.cdlp import cdlp
 
-    vertices, edges = p2p_mid(n=200, m=800)
-    g = make_graph(spark, edges, vertices)
-    got = _collect_map(cdlp(g, max_iter=5), "label")
     # fixed 5 synchronous rounds must match the oracle exactly
-    want_label = {v: v for v in vertices}
-    from collections import Counter, defaultdict
-
-    nbrs = defaultdict(list)
-    for s, d in edges:
-        nbrs[s].append(d)
-        nbrs[d].append(s)
-    label = dict(want_label)
-    for _ in range(5):
-        new = {}
-        for v in vertices:
-            if not nbrs[v]:
-                new[v] = label[v]
-            else:
-                c = Counter(label[u] for u in nbrs[v])
-                new[v] = max(c.items(), key=lambda kv: (kv[1], -kv[0]))[0]
-        label = new
-    assert got == label
-    g.unpersist()
+    for n, m in ((200, 800), (150, 600)):
+        vertices, edges = p2p_mid(n=n, m=m)
+        g = make_graph(spark, edges, vertices)
+        got = _collect_map(cdlp(g, max_iter=5), "label")
+        assert got == cdlp_oracle(vertices, edges, rounds=5), (n, m)
+        g.unpersist()
 
 
 @pytest.mark.parametrize("name", ["tri_cluster", "two_components", "diamond", "star_hub"])
@@ -131,17 +106,6 @@ def test_lcc_and_global_metrics(spark):
     g.unpersist()
 
 
-def test_cdlp_csr_mode(spark):
-    from graphscope_spark.algorithms.cdlp import cdlp
-
-    vertices, edges = p2p_mid(n=150, m=600)
-    g = make_graph(spark, edges, vertices)
-    got = _collect_map(cdlp(g, max_iter=5, mode="csr"), "label")
-    assert got == _collect_map(cdlp(g, max_iter=5), "label")
-    assert got == cdlp_oracle(vertices, edges, rounds=5)
-    g.unpersist()
-
-
 def test_wcc_logstar_mode(spark):
     """Pointer-jumping mode (cc-log.h): identical labels, O(log n) rounds on
     a high-diameter chain where the frontier mode needs diameter rounds."""
@@ -165,4 +129,6 @@ def test_wcc_logstar_mode(spark):
     assert a == b
     assert res_f.rounds > 350  # diameter-bound
     assert res_l.rounds <= 12  # doubling-bound
+    with pytest.raises(ValueError, match="unknown mode 'bogus'"):
+        wcc(g, mode="bogus")
     g.unpersist()
