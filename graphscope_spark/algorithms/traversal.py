@@ -7,16 +7,19 @@
   their out-edges next round; fixpoint when the frontier empties.
   Unreachable vertices keep +inf (reported as null in the result).
 * :func:`bfs` — depth from source (apps/bfs/bfs_generic.h, depth output);
-  unreachable = -1.
+  unreachable = -1. It is unit-weight :func:`sssp` with -1 ↔ +inf converted
+  at the boundary; it has no superstep body of its own.
 
-Both run the plan+finalize superstep protocol (one localCheckpoint per round)
-with the standard edge layout: edges ``repartition(P, "src")`` + persisted, so
+:func:`sssp` runs the plan+finalize superstep protocol (one localCheckpoint per
+round) over the Graph's persisted ``repartition(P, "src")`` edge layout, so
 the frontier⋈edges probe shuffles only the (small) frontier; ``shuffle_hash``
 hints on both the probe and the state update keep Catalyst from broadcasting
 the full-state side (the measured serialization landmine).
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,6 +29,13 @@ from graphscope_spark.engine.superstep import SuperstepResult, run_supersteps
 from graphscope_spark.graph.graph import Graph
 
 __all__ = ["sssp", "bfs", "sssp_delta_stepping"]
+
+
+def _weight(graph: Graph, weight_col: str | None):
+    """Edge weight as double; unit weight when the column is absent."""
+    if weight_col and weight_col in graph.edges.columns:
+        return F.col(weight_col).cast("double")
+    return F.lit(1.0)
 
 
 def sssp(
@@ -43,16 +53,7 @@ def sssp(
     seeds iteration from a prior state ``(id, dist, changed)`` — the
     Ingress delta-recompute entry (engine/ingress.sssp_delta)."""
     P = graph.num_partitions
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col and weight_col in graph.edges.columns
-        else F.lit(1.0)
-    )
-    edges = (
-        graph.edges.select("src", "dst", w.alias("w"))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges = graph.edges.select("src", "dst", _weight(graph, weight_col).alias("w"))
 
     def init() -> DataFrame:
         if warm_start is not None:
@@ -85,13 +86,10 @@ def sssp(
 
         return plan, finalize
 
-    try:
-        res = run_supersteps(
-            init, body, max_rounds=max_iter, checkpoint_dir=checkpoint_dir,
-            checkpoint_every=checkpoint_every, resume=resume,
-        )
-    finally:
-        edges.unpersist()
+    res = run_supersteps(
+        init, body, max_rounds=max_iter, checkpoint_dir=checkpoint_dir,
+        checkpoint_every=checkpoint_every, resume=resume,
+    )
     if return_result:
         return res
     return res.state.select(
@@ -126,11 +124,7 @@ def sssp_delta_stepping(
     degrades to Bellman-Ford, Δ→0 to Dijkstra's settled order).
     """
     P = graph.num_partitions
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col and weight_col in graph.edges.columns
-        else F.lit(1.0)
-    )
+    w = _weight(graph, weight_col)
     edges = (
         graph.edges.select("src", "dst", w.alias("w"))
         .repartition(P, "src")
@@ -259,60 +253,32 @@ def bfs(
     warm_start: DataFrame | None = None,
 ) -> DataFrame | SuperstepResult:
     """Returns ``(id, depth)``; unreachable → -1 (bfs_generic.h default).
-    ``warm_start`` seeds ``(id, depth, changed)`` — engine/ingress.bfs_delta."""
-    P = graph.num_partitions
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    def init() -> DataFrame:
-        if warm_start is not None:
-            return warm_start.select("id", "depth", "changed").repartition(P, "id")
-        return graph.vertices.select(
+    Unit-weight :func:`sssp` (a ``weight`` column is ignored); ``warm_start``
+    and the ``return_result`` state are ``(id, depth, changed)``."""
+    if warm_start is not None:
+        warm_start = warm_start.select(
             "id",
-            F.when(F.col("id") == source, 0).otherwise(-1).cast("int").alias("depth"),
-            (F.col("id") == source).alias("changed"),
-        ).repartition(P, "id")
-
-    def body(state: DataFrame, rnd: int) -> tuple[DataFrame, dict]:
-        # depth = min(parent depth) + 1, NOT the round counter: identical on
-        # a cold start (round-r frontier has depth r-1) and stays correct
-        # when warm-started mid-fixpoint from a delta (round counters reset)
-        frontier = state.filter("changed").select("id", "depth")
-        reached = (
-            edges.join(frontier.hint("shuffle_hash"), edges.src == frontier.id)
-            .groupBy("dst")
-            .agg((F.min("depth") + 1).alias("cand"))
+            F.coalesce(_distance(F.col("depth")), F.lit(float("inf"))).alias("dist"),
+            "changed",
         )
-        newly = F.col("cand").isNotNull() & (
-            (F.col("depth") == -1) | (F.col("cand") < F.col("depth"))
-        )
-        plan = state.join(
-            reached.hint("shuffle_hash"), state.id == reached.dst, "left"
-        ).select(
-            state.id.alias("id"),
-            F.when(newly, F.col("cand"))
-            .otherwise(F.col("depth"))
-            .cast("int")
-            .alias("depth"),
-            newly.alias("changed"),
-        )
-
-        def finalize(st: DataFrame) -> dict:
-            active = st.filter("changed").count()
-            return {"converged": active == 0, "active": active}
-
-        return plan, finalize
-
-    try:
-        res = run_supersteps(init, body, max_rounds=max_depth)
-    finally:
-        edges.unpersist()
+    res = sssp(
+        graph, source, weight_col=None, max_iter=max_depth,
+        return_result=True, warm_start=warm_start,
+    )
+    depth = _depth(F.col("dist")).alias("depth")
     if return_result:
-        return res
-    return res.state.select("id", "depth")
+        return replace(res, state=res.state.select("id", depth, "changed"))
+    return res.state.select("id", depth)
+
+
+def _distance(depth):
+    """BFS depth → unit-weight SSSP distance; -1 (unreached) → null."""
+    return F.when(depth >= 0, depth.cast("double"))
+
+
+def _depth(dist):
+    """Unit-weight SSSP distance → BFS depth (int); null or +inf → -1."""
+    return F.when(dist < float("inf"), dist.cast("int")).otherwise(-1)
 
 
 def random_multi_bfs(

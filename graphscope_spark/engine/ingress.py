@@ -16,15 +16,18 @@ bit-for-bit (see tests/test_ingress.py).
 
 Deletions are NOT monotone (a removed edge can invalidate arbitrarily much
 of the converged state); the reference handles that case with full
-recomputation. Here three deletion deltas ARE supported without
+recomputation. Here two deletion kernels ARE supported without
 monotonicity, each bounded by the damage, not the graph:
 :func:`wcc_delta_delete` (a deleted edge can only split its own component
 → recompute just the touched components' induced subgraphs) and
-:func:`sssp_delta_delete` / :func:`bfs_delta_delete` (classic
-invalidate-and-repair: only the forward tight-DAG cone of a deleted
-shortest-path edge can be wrong → reset the cone, re-relax from its
-outside boundary). pagerank deletions remain full-recompute (every score
-depends on every edge).
+:func:`sssp_delta_delete` (classic invalidate-and-repair: only the forward
+tight-DAG cone of a deleted shortest-path edge can be wrong → reset the
+cone, re-relax from its outside boundary). pagerank deletions remain
+full-recompute (every score depends on every edge).
+
+BFS depth is unit-weight SSSP distance (-1 ↔ +inf), so :func:`bfs_delta`
+and :func:`bfs_delta_delete` are thin wrappers over :func:`sssp_delta` and
+:func:`sssp_delta_delete` that convert depths at the boundary.
 """
 
 from __future__ import annotations
@@ -214,14 +217,10 @@ def sssp_delta_delete(
     one count() all-reduce per round, same shape as the engine's frontier
     loops); the repair is the standard warm-started Bellman-Ford.
     """
-    from graphscope_spark.algorithms.traversal import sssp
+    from graphscope_spark.algorithms.traversal import _weight, sssp
 
     g2 = graph.remove_edges(del_edges)
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col and weight_col in graph.edges.columns
-        else F.lit(1.0)
-    )
+    w = _weight(graph, weight_col)
     dist = prev_distances.select(
         "id", F.col("distance").cast("double").alias("d")
     ).where(F.col("d").isNotNull())
@@ -311,33 +310,17 @@ def bfs_delta(
     max_depth: int = 10_000,
 ) -> DataFrame:
     """``(id, depth)`` over the edge-augmented graph, resumed from the
-    converged base depths (id, depth; -1 = unreachable)."""
-    from graphscope_spark.algorithms.traversal import bfs
+    converged base depths (id, depth; -1 = unreachable) — unit-weight
+    :func:`sssp_delta`."""
+    from graphscope_spark.algorithms.traversal import _depth, _distance
 
-    g2 = graph.add_edges(new_edges)
-    prev = prev_depths.select("id", F.col("depth").cast("int").alias("pdepth"))
-    state = (
-        g2.vertices.select("id")
-        .join(prev, "id", "left")
-        .join(_endpoints(new_edges, side="src"), "id", "left")
-        .select(
-            "id",
-            F.coalesce(
-                "pdepth",
-                F.when(F.col("id") == source, 0).otherwise(-1),
-            )
-            .cast("int")
-            .alias("depth"),
-            (
-                F.col("_touched").isNotNull()
-                & (F.coalesce("pdepth", F.lit(-1)) >= 0)
-            ).alias("changed"),
-        )
+    prev = prev_depths.select("id", _distance(F.col("depth")).alias("distance"))
+    out = sssp_delta(
+        graph, new_edges, prev, source, weight_col=None, max_iter=max_depth
     )
-    return bfs(g2, source, max_depth=max_depth, warm_start=state)
+    return out.select("id", _depth(F.col("distance")).alias("depth"))
 
 
-@tuned_loop
 def bfs_delta_delete(
     graph: Graph,
     del_edges: DataFrame,
@@ -346,88 +329,18 @@ def bfs_delta_delete(
     max_cone_iter: int = 200,
     max_depth: int = 10_000,
 ) -> DataFrame:
-    """``(id, depth)`` over ``graph.remove_edges(del_edges)`` — BFS
-    deletion delta, same invalidate-and-repair as
-    :func:`sssp_delta_delete` with unit weights: tight edges are
-    ``depth[y] == depth[x] + 1``, the stale set is the deleted tight
-    edges' forward closure over the tight DAG, reset it to −1
-    (bfs_generic.h's unreached) and re-expand from the cone's outside
-    boundary."""
-    from graphscope_spark.algorithms.traversal import bfs
+    """``(id, depth)`` over ``graph.remove_edges(del_edges)`` — unit-weight
+    :func:`sssp_delta_delete`: tight edges are ``depth[y] == depth[x] + 1``,
+    the stale cone is reset to −1 (bfs_generic.h's unreached) and
+    re-expanded from its outside boundary."""
+    from graphscope_spark.algorithms.traversal import _depth, _distance
 
-    g2 = graph.remove_edges(del_edges)
-    dep = prev_depths.select(
-        "id", F.col("depth").cast("int").alias("d")
-    ).where(F.col("d") >= 0)
-    dsrc = dep.withColumnRenamed("id", "src").withColumnRenamed("d", "ds")
-    ddst = dep.withColumnRenamed("id", "dst").withColumnRenamed("d", "dd")
-
-    dels = graph.edges.select("src", "dst").join(
-        del_edges.select("src", "dst").distinct(), ["src", "dst"], "left_semi"
+    prev = prev_depths.select("id", _distance(F.col("depth")).alias("distance"))
+    out = sssp_delta_delete(
+        graph, del_edges, prev, source, weight_col=None,
+        max_cone_iter=max_cone_iter, max_iter=max_depth,
     )
-    cone = (
-        dels.join(dsrc, "src")
-        .join(ddst, "dst")
-        .where(F.col("dd") == F.col("ds") + 1)
-        .select(F.col("dst").alias("id"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if cone.limit(1).count() == 0:
-        return prev_depths.select("id", "depth")
-
-    tight = (
-        g2.edges.select("src", "dst")
-        .join(dsrc, "src")
-        .join(ddst, "dst")
-        .where(F.col("dd") == F.col("ds") + 1)
-        .select("src", "dst")
-        .localCheckpoint()
-    )
-    frontier = cone
-    closed = False
-    for _ in range(max_cone_iter):
-        nxt = (
-            tight.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(cone, "id", "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:
-            closed = True
-            break
-        cone = cone.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    if not closed:
-        # incomplete cone ⇒ silently-wrong depths outside it; recompute cold
-        return bfs(g2, source, max_depth=max_depth)
-
-    in_cone = cone.withColumn("_c", F.lit(True))
-    boundary = (
-        g2.edges.select("src", "dst")
-        .join(cone.withColumnRenamed("id", "dst"), "dst", "left_semi")
-        .select(F.col("src").alias("id"))
-        .distinct()
-        .join(cone, "id", "left_anti")
-        .withColumn("_b", F.lit(True))
-    )
-    state = (
-        g2.vertices.select("id")
-        .join(dep, "id", "left")
-        .join(in_cone, "id", "left")
-        .join(boundary, "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_c").isNotNull(), -1)
-            .otherwise(F.coalesce("d", F.lit(-1)))
-            .cast("int")
-            .alias("depth"),
-            (F.col("_b").isNotNull() & (F.coalesce("d", F.lit(-1)) >= 0))
-            .alias("changed"),
-        )
-    )
-    return bfs(g2, source, max_depth=max_depth, warm_start=state)
+    return out.select("id", _depth(F.col("distance")).alias("depth"))
 
 
 def pagerank_delta(

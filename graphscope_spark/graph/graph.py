@@ -43,7 +43,6 @@ class Graph:
         vertices: DataFrame | None = None,
         num_partitions: int | None = None,
         directed: bool = True,
-        persist: bool = True,
     ) -> None:
         self.spark: SparkSession = edges.sparkSession
         if num_partitions is None:
@@ -66,7 +65,7 @@ class Graph:
             "dst", F.col("dst").cast("long")
         )
         # Edge-cut layout: co-locate edges with their source fragment.
-        self.edges = edges.repartition(self.num_partitions, "src")
+        self.edges = self._persist(edges.repartition(self.num_partitions, "src"))
         if vertices is None:
             vertices = (
                 edges.select(F.col("src").alias("id"))
@@ -75,15 +74,13 @@ class Graph:
             )
         else:
             vertices = vertices.withColumn("id", F.col("id").cast("long"))
-        self.vertices = vertices.repartition(self.num_partitions, "id")
-        if persist:
-            self.edges = self._persist(self.edges)
-            self.vertices = self._persist(self.vertices)
+        self.vertices = self._persist(
+            vertices.repartition(self.num_partitions, "id")
+        )
         self._num_vertices: int | None = None
         self._num_edges: int | None = None
         self._out_degrees: DataFrame | None = None
         self._in_degrees: DataFrame | None = None
-        self._undirected: Graph | None = None
 
     # -- bookkeeping ------------------------------------------------------
 
@@ -96,8 +93,6 @@ class Graph:
         for df in self._persisted:
             df.unpersist()
         self._persisted.clear()
-        if self._undirected is not None:
-            self._undirected.unpersist()
 
     # -- stats ------------------------------------------------------------
 

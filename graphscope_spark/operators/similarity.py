@@ -123,11 +123,17 @@ def _portable_signatures_arrow(dim: int, bits: int, tables: int):
     folds per row — measured 8-11 s of the embedding_lsh_topk query at
     sf0.1; a fully unrolled Catalyst expression was measured WORSE (codegen
     OOM at 16g / 3x slower interpreted). This kernel is bit-exact with the
-    JVM fold: products are the same IEEE doubles, ``np.cumsum`` accumulates
-    in the same sequential left-fold order, and the sign test mirrors Spark
-    semantics (NaN ≥ 0 is true; ±0.0 both set the bit). Degenerate rows
-    (null vector, length ≠ dim) get the all-zero-bit signature ``t·2³²``,
-    exactly like the null-poisoned fold they would produce in the JVM.
+    JVM fold: products are the same IEEE doubles, the projections accumulate
+    one dimension at a time in the same sequential left-fold order
+    (``0.0 + p0 == p0``), and the sign test mirrors Spark semantics (NaN ≥ 0
+    is true; ±0.0 both set the bit). Degenerate rows (null vector, a null
+    element, length ≠ dim) get the all-zero-bit signature ``t·2³²``, exactly
+    like the null-poisoned fold they produce in the JVM. Arrow hands a null
+    element to pandas as NaN, indistinguishable from a NaN value, so the
+    null-element flag is computed JVM-side and passed as a second column.
+    Working memory is O(rows × (dim + tables·bits)) per Arrow batch.
+
+    Returns a function of the vector column.
     """
     import numpy as np
     import pandas as pd  # noqa: F401 — resolves the UDF type hints
@@ -144,34 +150,33 @@ def _portable_signatures_arrow(dim: int, bits: int, tables: int):
     base = np.array([t << 32 for t in range(tables)], dtype=np.int64)
 
     @pandas_udf("array<long>")
-    def _sig(vecs: pd.Series) -> pd.Series:
+    def _sig(vecs: pd.Series, degenerate: pd.Series) -> pd.Series:
         res: list = [None] * len(vecs)
         good_idx: list = []
         good_rows: list = []
-        for i, v in enumerate(vecs):
-            if v is not None and not isinstance(v, float) and len(v) == dim:
+        for i, (v, bad) in enumerate(zip(vecs, degenerate)):
+            if not bad and len(v) == dim:
                 good_idx.append(i)
                 good_rows.append(np.asarray(v, dtype=np.float64))
             else:
                 res[i] = [int(x) for x in base]
         if good_rows:
             V = np.stack(good_rows)
-            for s in range(0, len(V), 2048):
-                chunk = V[s:s + 2048]
-                # (rows, dim, planes): per-term products, then a cumulative
-                # sum along dim — np.cumsum is sequential accumulation, the
-                # same fold order as aggregate(..., 0.0, acc + x)
-                terms = chunk[:, :, None] * W[None, :, :]
-                proj = np.cumsum(terms, axis=1)[:, -1, :]
-                bitset = np.isnan(proj) | (proj >= 0.0)
-                sigs = (
-                    bitset.reshape(len(chunk), tables, bits) * bitw
-                ).sum(axis=2) + base
-                for j in range(len(chunk)):
-                    res[good_idx[s + j]] = [int(x) for x in sigs[j]]
+            proj = np.zeros((len(V), tables * bits), dtype=np.float64)
+            for d in range(dim):
+                proj += V[:, d, None] * W[d]
+            bitset = np.isnan(proj) | (proj >= 0.0)
+            sigs = (bitset.reshape(len(V), tables, bits) * bitw).sum(axis=2) + base
+            for j, i in enumerate(good_idx):
+                res[i] = [int(x) for x in sigs[j]]
         return pd.Series(res)
 
-    return _sig
+    def signatures(vec):
+        # a null vector → exists() is null → coalesced to degenerate
+        flag = F.coalesce(F.exists(vec, lambda x: x.isNull()), F.lit(True))
+        return _sig(vec, flag)
+
+    return signatures
 
 
 def with_lsh_signature(

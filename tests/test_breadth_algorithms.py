@@ -13,10 +13,16 @@ def test_bfs(spark):
     from graphscope_spark.algorithms.traversal import bfs
 
     vertices, edges = p2p_mid(n=200, m=600)
-    g = make_graph(spark, edges, vertices)
-    got = {r["id"]: r["depth"] for r in bfs(g, source=1).collect()}
-    assert got == bfs_oracle(vertices, edges, 1)
-    g.unpersist()
+    want = bfs_oracle(vertices, edges, 1)
+    # bfs is unit-weight sssp: a non-unit weight column must be ignored
+    wedges = [(s, d, 1.0 + (s * 7 + d * 13) % 5) for s, d in edges]
+    for g in (
+        make_graph(spark, edges, vertices),
+        make_graph(spark, wedges, vertices, weights=True),
+    ):
+        got = {r["id"]: r["depth"] for r in bfs(g, source=1).collect()}
+        assert got == want
+        g.unpersist()
 
 
 def test_sssp_weighted(spark):

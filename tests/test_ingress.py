@@ -5,6 +5,7 @@ from __future__ import annotations
 import random
 
 from tests.conftest import make_graph
+from tests.oracles import bfs_oracle
 
 from graphscope_spark.engine.ingress import bfs_delta, sssp_delta, wcc_delta
 
@@ -307,12 +308,20 @@ def test_bfs_delta_delete_random_equals_full(spark):
     n = 40
     base = _rand_edges(n, 70, seed=17)
     dels = random.Random(8).sample(base, 14)
-    g = make_graph(spark, base, vertices=list(range(n)))
-    prev = bfs(g, 0)
     ddf = spark.createDataFrame(dels, "src long, dst long")
-    got = _rows(bfs_delta_delete(g, ddf, prev, 0))
-    want = _rows(bfs(g.remove_edges(ddf), 0))
-    assert got == want
+    kept = sorted(set(base) - set(dels))
+    oracle = sorted(bfs_oracle(list(range(n)), kept, 0).items())
+    # a non-unit weight column must not change BFS depths (unit-weight sssp)
+    wbase = [(a, b, 1.0 + (a * 7 + b) % 5) for a, b in base]
+    for g in (
+        make_graph(spark, base, vertices=list(range(n))),
+        make_graph(spark, wbase, vertices=list(range(n)), weights=True),
+    ):
+        prev = bfs(g, 0)
+        got = _rows(bfs_delta_delete(g, ddf, prev, 0))
+        want = _rows(bfs(g.remove_edges(ddf), 0))
+        assert got == want
+        assert got == oracle
 
 
 def test_bfs_delta_delete_unreachable_after(spark):
